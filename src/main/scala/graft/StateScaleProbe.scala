@@ -37,18 +37,19 @@ object StateScaleProbe {
   private def num(v: Double, digits: Int = 3): String =
     String.format(java.util.Locale.ROOT, s"%.${digits}f", Double.box(v))
 
-  /** Bucket pointers of a manifest file (the plain-text `b=c` lines) —
-    * read directly so the probe can diff layouts the way the feed
-    * does, without private access. */
-  private def manifestBuckets(path: java.io.File): Map[Int, Long] =
-    scala.io.Source.fromFile(path, "UTF-8").getLines()
-      .filter(l => l.nonEmpty && l.head.isDigit)
-      .map { l => val Array(b, c) = l.split("=", 2); b.toInt -> c.toLong }
-      .toMap
-
-  private def manifests(root: String): Seq[java.io.File] =
-    Option(new java.io.File(s"$root/_commits").listFiles()).toSeq.flatten
-      .filter(_.getName.matches("c\\d+\\.txt")).sortBy(_.getName)
+  /** Buckets whose pointer differs between two retained commits — the
+    * rewrite evidence of everything committed in between, diffed the
+    * way the change feed does. */
+  private[graft] def bucketsRewritten(
+      conf: org.apache.hadoop.conf.Configuration, root: String,
+      before: Long, after: Long): Int = {
+    def pointers(commit: Long): Map[Int, Long] =
+      BucketedStateTable.snapshotPointersAndCounts(conf, root, commit)
+        .getOrElse(throw new NoSuchElementException(
+          s"commit $commit is not retained at $root"))._1
+    val (b, a) = (pointers(before), pointers(after))
+    (b.keySet ++ a.keySet).count(k => b.get(k) != a.get(k))
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -142,7 +143,8 @@ object StateScaleProbe {
         keepCommits = 10, retentionFloorMillis = 0L)
       t.merge(d, keys = Seq("doc_id"))
       val rows = t.read().get.count()
-      val preManifests = manifests(root).length
+      val conf = spark.sessionState.newHadoopConf()
+      val preDml = BucketedStateTable.snapshotCommits(conf, root).last
       val cat = "gprobe_" + tag
       spark.conf.set(s"spark.sql.catalog.$cat",
         classOf[graft.sources.GraftStateCatalog].getName)
@@ -163,11 +165,8 @@ object StateScaleProbe {
       // rewrite evidence: pointers changed between the pre-DML manifest
       // and the final one — the union of the three statements' dirty
       // buckets, out of 256
-      val ms = manifests(root)
-      val before = manifestBuckets(ms(preManifests - 1))
-      val after = manifestBuckets(ms.last)
-      val rewritten = (before.keySet ++ after.keySet)
-        .count(b => before.get(b) != after.get(b))
+      val rewritten = bucketsRewritten(conf, root, preDml,
+        BucketedStateTable.snapshotCommits(conf, root).last)
       s""""$tag":{"table_rows":$rows,"dml_sec":${num(dmlSec)},""" +
         s""""buckets_rewritten":$rewritten,"buckets_total":256,""" +
         s""""dml_resources":${dmlSnap.json}}"""

@@ -761,10 +761,11 @@ object Dedup {
     * hashes, so documents with edge whitespace would be re-admitted as
     * "new"), and `first_id` now keeps the caller's id type verbatim (a
     * store whose `first_id` was cast to long fails `widenCheck`'s
-    * no-retype rule on the first merge with a string id). Stores
-    * created before r15 must be rebuilt once from the retained corpus
-    * via [[rebuildExactState]]; there is no in-place migration because
-    * the old hashes are not recoverable into the new normalization. */
+    * no-retype rule on the first merge with a string id). The recovery
+    * path for such a store — or any store whose hashes are suspect — is
+    * [[rebuildExactState]] from the retained corpus; there is no
+    * in-place migration because the old hashes are not recoverable
+    * into the new normalization. */
   def incrementalExact(
       state: graft.pipeline.BucketedStateTable,
       batch: DataFrame,
@@ -803,10 +804,10 @@ object Dedup {
   }
 
   /** One-shot rebuild of an [[incrementalExact]] seen-state from the
-    * retained corpus — the migration path for stores written before
-    * the r15 fingerprint-normalization / id-type changes (see the
-    * state-format note on [[incrementalExact]]), and the recovery path
-    * for any store whose hashes are suspect. Recomputes every
+    * retained corpus — the recovery path for any store whose hashes
+    * are suspect, including stores written before the r15
+    * fingerprint-normalization / id-type changes (see the state-format
+    * note on [[incrementalExact]]). Recomputes every
     * fingerprint under the CURRENT normalization and atomically
     * replaces the table's contents in one commit (crash-safe: a
     * failure leaves the old snapshot current). Costs one full corpus

@@ -103,6 +103,7 @@ class BucketedStateTable(
     // values CLUSTER by bucket. Row/byte counts ride along and feed
     // scan-size estimates. Nil (default) = no stats job, no lines.
     statsCols: Seq[String] = Nil) extends StateTable {
+  import BucketedStateTable.{Layout, Manifest, schemaOf}
 
   require(keyCols.nonEmpty, "BucketedStateTable needs at least one key column")
   require(numBuckets > 0, "numBuckets must be positive")
@@ -253,49 +254,36 @@ class BucketedStateTable(
     }
 
   // ---- manifest -----------------------------------------------------
-  // Plain-text manifest (`commit=<id>` header then `<bucket>=<commit>`
-  // lines) — no JSON parser needed, diffable, and the rename that
-  // publishes it is the atomic commit point.
+  // The format, its one parser and its one renderer live in the
+  // companion ([[BucketedStateTable.parse]] / [[BucketedStateTable.render]]);
+  // the rename that publishes a rendered manifest is the atomic commit
+  // point.
 
-  private case class Manifest(commitId: Long, buckets: Map[Int, Long],
-      schemaJson: Option[String] = None,
-      // layout metadata the cross-split change feed needs: the
-      // manifest's OWN bucket count (old manifests stay readable after
-      // a split), and — on a split commit only — the factor and the
-      // pre-split base manifest it snapshotted
-      manifestNumBuckets: Int = -1,
-      splitFactor: Option[Int] = None,
-      splitBasedOn: Option[Long] = None,
-      // per-bucket zone-map stats as OPAQUE one-line JSON payloads
-      // (decoded on demand by [[ZoneMaps.decode]]); a bucket absent
-      // here is simply un-statted — pruning must keep it
-      bucketStats: Map[Int, String] = Map.empty)
+  /** This handle's layout at `n` buckets — what every manifest it
+    * publishes records (a relayout publishes its NEW count). */
+  private def layoutFor(n: Int): Layout =
+    Layout(keyCols, effBucketCols, n, keepCommits, retentionFloorMillis,
+      statsCols)
 
   private def manifestFiles(): Seq[(Long, Path)] =
     BucketedStateTable.listManifests(fs, root)
       .map { case (id, s) => id -> s.getPath }
 
-  /** `checkLayout = false` is for liveness bookkeeping only ([[prune]]
-    * needs the commit ids an old-layout manifest still references, e.g.
-    * right after a [[rebucket]], without resolving its data) — every
-    * data-reading path keeps the check. */
+  /** `checkLayout = false` is for liveness bookkeeping and the
+    * cross-split change feed only ([[prune]] needs the commit ids an
+    * old-layout manifest still references, e.g. right after a
+    * [[rebucket]], without resolving its data) — every data-reading
+    * path keeps the check. */
   private def readManifest(p: Path, checkLayout: Boolean = true): Manifest = {
-    val in = fs.open(p)
-    val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    val lines = text.linesIterator.filter(_.nonEmpty).toSeq
-    val kv = lines.map { l =>
-      val Array(k, v) = l.split("=", 2); (k, v)
-    }.toMap
+    val m = BucketedStateTable.readManifest(fs, p)
     // the bucket count DEFINES the layout: opening an existing table
     // with a different numBuckets would hash keys into the wrong
     // buckets and silently corrupt merges — refuse instead
-    if (checkLayout) kv.get("numBuckets").foreach { n =>
-      require(n.toInt == numBuckets,
-        s"table at $path is laid out with numBuckets=$n; this instance " +
-          s"was constructed with numBuckets=$numBuckets — re-bucketing " +
-          "requires a full rewrite into a new table")
-    }
+    if (checkLayout)
+      require(m.layout.numBuckets == numBuckets,
+        s"table at $path is laid out with numBuckets=${m.layout.numBuckets}; " +
+          s"this instance was constructed with numBuckets=$numBuckets — " +
+          "re-bucketing requires a full rewrite into a new table")
     // the bucketing COLUMNS equally define the layout. Unlike the
     // bucket COUNT (which checkLayout=false relaxes so liveness
     // bookkeeping and the cross-split change feed can read
@@ -303,35 +291,16 @@ class BucketedStateTable(
     // unconditionally: no legitimate history ever changes it, and a
     // relaxed read joining/hashing on the wrong columns would be
     // silently wrong rather than merely refused.
-    kv.get("bucketCols").foreach { bc =>
-      require(bc == effBucketCols.mkString(","),
-        s"table at $path is bucketed by [$bc]; this instance buckets by " +
-          s"[${effBucketCols.mkString(",")}] — re-bucketing requires a " +
-          "full rewrite into a new table")
-    }
+    require(m.layout.bucketCols == effBucketCols,
+      s"table at $path is bucketed by [${m.layout.bucketCols.mkString(",")}]; " +
+        s"this instance buckets by [${effBucketCols.mkString(",")}] — " +
+        "re-bucketing requires a full rewrite into a new table")
     // and the merge KEY: an instance keyed differently would merge with
     // the wrong uniqueness and silently duplicate or collapse rows
-    kv.get("keyCols").foreach { kc =>
-      require(kc == keyCols.mkString(","),
-        s"table at $path is keyed by [$kc]; this instance is keyed by " +
-          s"[${keyCols.mkString(",")}]")
-    }
-    Manifest(
-      kv("commit").toLong,
-      lines.collect {
-        case l if l.nonEmpty && l.head.isDigit =>
-          val Array(b, c) = l.split("=", 2); b.toInt -> c.toLong
-      }.toMap,
-      kv.get("schema"),
-      manifestNumBuckets =
-        kv.get("numBuckets").map(_.toInt).getOrElse(numBuckets),
-      splitFactor = kv.get("splitFactor").map(_.toInt),
-      splitBasedOn = kv.get("splitBasedOn").map(_.toLong),
-      bucketStats = lines.collect {
-        case l if l.startsWith("zmap.") =>
-          val Array(k, j) = l.split("=", 2)
-          k.stripPrefix("zmap.").toInt -> j
-      }.toMap)
+    require(m.layout.keyCols == keyCols,
+      s"table at $path is keyed by [${m.layout.keyCols.mkString(",")}]; " +
+        s"this instance is keyed by [${keyCols.mkString(",")}]")
+    m
   }
 
   private def currentManifest(): Option[Manifest] =
@@ -353,35 +322,9 @@ class BucketedStateTable(
     * is disjoint from every intervening commit's rewritten set rebases
     * onto the new head and republishes instead of failing — only true
     * overlaps (and layout/schema changes) reach the caller. */
-  private def writeManifest(m: Manifest, basedOn: Long,
-      forNumBuckets: Int = numBuckets): Unit = {
+  private def writeManifest(m: Manifest, basedOn: Long): Unit = {
     fs.mkdirs(commitsDir)
-    // schema= records the row schema as single-line JSON so a
-    // committed-but-EMPTY snapshot (e.g. a fully drained queue) still
-    // carries a readable shape — the DSv2 source returns an empty table
-    // instead of failing where tableExists says true. StructType.json
-    // never contains a newline, and the k=v split is first-'=' only, so
-    // the JSON body parses back verbatim.
-    // keyCols= records the table's merge key so a handle-less writer
-    // (the DSv2 SQL INSERT surface) can reconstruct the exact layout
-    // and route through merge() — the manifest is the one place the
-    // layout is authoritative. keepCommits=/retentionFloorMillis=
-    // record the owner's RETENTION policy for the same reason: a SQL
-    // write must not prune history the owning handle was configured to
-    // keep.
-    val body = (s"commit=${m.commitId}\nnumBuckets=$forNumBuckets\n" +
-      s"bucketCols=${effBucketCols.mkString(",")}\n" +
-      s"keyCols=${keyCols.mkString(",")}\n" +
-      s"keepCommits=$keepCommits\n" +
-      s"retentionFloorMillis=$retentionFloorMillis\n" +
-      m.splitFactor.map(f => s"splitFactor=$f\n").getOrElse("") +
-      m.splitBasedOn.map(b => s"splitBasedOn=$b\n").getOrElse("") +
-      (if (statsCols.nonEmpty) s"statsCols=${statsCols.mkString(",")}\n"
-       else "") +
-      m.schemaJson.map(j => s"schema=$j\n").getOrElse("") +
-      m.bucketStats.toSeq.sortBy(_._1)
-        .map { case (b, j) => s"zmap.$b=$j\n" }.mkString +
-      m.buckets.toSeq.sorted.map { case (b, c) => s"$b=$c\n" }.mkString)
+    val body = BucketedStateTable.render(m)
     val tmp = new Path(commitsDir, f".c${m.commitId}%08d.txt.tmp")
     val out = fs.create(tmp, true)
     try out.write(body.getBytes("UTF-8")) finally out.close()
@@ -449,10 +392,6 @@ class BucketedStateTable(
     }
   }
 
-  private def schemaOf(json: String): org.apache.spark.sql.types.StructType =
-    org.apache.spark.sql.types.DataType.fromJson(json)
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
-
   // shared widening contract — one meaning of ADD COLUMN across all
   // StateTable implementations (StateOps owns the check + null-fill)
   private def widenCheck(from: org.apache.spark.sql.types.StructType,
@@ -487,8 +426,9 @@ class BucketedStateTable(
         // trait contract: a committed-but-EMPTY (drained) table reads as
         // Some(empty) under its recorded schema, uniformly with the
         // parquet/JDBC twins — None is reserved for never-created. Only
-        // manifests predating the schema= line (no shape to present)
-        // still fall through to None.
+        // a manifest without a schema= line (a relayout of a
+        // never-committed table: no shape to present) falls through to
+        // None.
         .orElse(m.schemaJson.map(j => spark.createDataFrame(
           java.util.Collections.emptyList[org.apache.spark.sql.Row](),
           schemaOf(j))))
@@ -515,10 +455,10 @@ class BucketedStateTable(
     // pointers still resolve their data dirs — the layout only governs
     // where MUTATIONS hash); an arbitrary rebucket still truncates
     // history by design, matching the SQL VERSION AS OF face
-    if (m.manifestNumBuckets != numBuckets)
+    if (m.layout.numBuckets != numBuckets)
       require(layoutChains(m, currentCommitIdOrZero(), numBuckets),
         s"commit $commitId at $path predates a rebucket " +
-          s"(${m.manifestNumBuckets} -> $numBuckets buckets, not a " +
+          s"(${m.layout.numBuckets} -> $numBuckets buckets, not a " +
           "splitBuckets chain) — history truncates at an arbitrary " +
           "relayout; re-snapshot from a post-rebucket commit")
     readFrom(m, m.buckets.keys.toSeq)
@@ -569,11 +509,11 @@ class BucketedStateTable(
     * step-by-step. */
   private def layoutChains(mOld: Manifest, toId: Long, toBuckets: Int): Boolean = {
     val chained = splitsIn(mOld.commitId, toId)
-      .foldLeft(Option(mOld.manifestNumBuckets)) {
+      .foldLeft(Option(mOld.layout.numBuckets)) {
         case (Some(l), s) if s.splitFactor.exists(f =>
-            (f >= 2 && s.manifestNumBuckets == l * f) ||
-            (f <= -2 && l % -f == 0 && s.manifestNumBuckets == l / -f)) =>
-          Some(s.manifestNumBuckets)
+            (f >= 2 && s.layout.numBuckets == l * f) ||
+            (f <= -2 && l % -f == 0 && s.layout.numBuckets == l / -f)) =>
+          Some(s.layout.numBuckets)
         case _ => None
       }
     chained.contains(toBuckets)
@@ -623,11 +563,11 @@ class BucketedStateTable(
   private def changedAcrossSplits(mFrom: Manifest, mTo: Manifest): (Seq[Int], Seq[Int]) = {
     val splits = splitsIn(mFrom.commitId, mTo.commitId)
     if (splits.isEmpty ||
-        !layoutChains(mFrom, mTo.commitId, mTo.manifestNumBuckets))
+        !layoutChains(mFrom, mTo.commitId, mTo.layout.numBuckets))
       throw new IllegalStateException(
         s"changesBetween(${mFrom.commitId}, ${mTo.commitId}) at $path " +
-          s"crosses a layout change (${mFrom.manifestNumBuckets} -> " +
-          s"${mTo.manifestNumBuckets} buckets) that is not a " +
+          s"crosses a layout change (${mFrom.layout.numBuckets} -> " +
+          s"${mTo.layout.numBuckets} buckets) that is not a " +
           "splitBuckets/coalesceBuckets chain — an arbitrary rebucket " +
           "truncates feed history by design. Reseed the consumer: " +
           "restart the stream " +
@@ -642,18 +582,18 @@ class BucketedStateTable(
     // segment — relayout manifests snapshot their base, so a
     // relayout's own segment edge is exact)
     var cur = Set.empty[Int]
-    var curLayout = mFrom.manifestNumBuckets
+    var curLayout = mFrom.layout.numBuckets
     starts.zip(ends).foreach { case (a, b) =>
-      if (a.manifestNumBuckets != curLayout) {
-        cur = mapBuckets(cur, curLayout, a.manifestNumBuckets)
-        curLayout = a.manifestNumBuckets
+      if (a.layout.numBuckets != curLayout) {
+        cur = mapBuckets(cur, curLayout, a.layout.numBuckets)
+        curLayout = a.layout.numBuckets
       }
       cur ++= (a.buckets.keySet ++ b.buckets.keySet)
         .filter(x => a.buckets.get(x) != b.buckets.get(x))
     }
     // backward pass: stepwise preimage of the changed set down to the
     // FROM layout — the buckets whose old rows the diff must read
-    val layouts = starts.map(_.manifestNumBuckets)
+    val layouts = starts.map(_.layout.numBuckets)
     var pre: Set[Int] = cur
     layouts.indices.reverse.drop(1).foreach { i =>
       pre = mapBuckets(pre, layouts(i + 1), layouts(i))
@@ -712,7 +652,7 @@ class BucketedStateTable(
             s"commits $fromCommit/$toCommit"))
     val empty = spark.createDataFrame(
       java.util.Collections.emptyList[org.apache.spark.sql.Row](), rowSchema)
-    val sameLayout = mFrom.manifestNumBuckets == mTo.manifestNumBuckets
+    val sameLayout = mFrom.layout.numBuckets == mTo.layout.numBuckets
     // The pointer-compare fast path gates on NO RELAYOUT IN THE RANGE,
     // not on endpoint layout equality: a split+coalesce round trip
     // (8→16→8) has equal endpoints but rewrote every bucket twice, so
@@ -742,7 +682,7 @@ class BucketedStateTable(
       if (!walked) oldRaw
       else oldRaw.filter(
         pmod(xxhash64(effBucketCols.map(col): _*),
-            lit(mTo.manifestNumBuckets.toLong)).cast("int")
+            lit(mTo.layout.numBuckets.toLong)).cast("int")
           .isin(changed.map(Integer.valueOf): _*))
     val oldDf = alignTo(oldScoped, rowSchema, "changesBetween")
       .withColumn("__in_old", lit(true))
@@ -865,8 +805,8 @@ class BucketedStateTable(
     * a partition-pruned scan). None = never committed. An empty
     * surviving set returns an empty frame under the recorded schema:
     * "provably no matching rows" is an answer, not an error.
-    * Manifests that predate the schema line skip pruning entirely
-    * (no column types to compare with — conservative full read). */
+    * A manifest without a schema line skips pruning entirely (no
+    * column types to compare with — conservative full read). */
   def readWhere(
       filters: Seq[org.apache.spark.sql.sources.Filter]): Option[DataFrame] =
     currentManifest().flatMap { m =>
@@ -1057,7 +997,7 @@ class BucketedStateTable(
       val rec = m0.schemaJson.map(schemaOf).getOrElse(
         throw new IllegalStateException(
           s"analyzeStats: the manifest at $path records no schema " +
-            "(pre-schema-line table) — commit once under this version " +
+            "(a relayout of a never-committed table) — commit once " +
             "first"))
       val eligible = statsEligible(cols, rec)
       require(eligible.nonEmpty,
@@ -1110,15 +1050,15 @@ class BucketedStateTable(
           // split metadata is NOT copied: it belongs to the split
           // commit alone (a republished factor would corrupt the
           // feed's boundary walk), exactly as widenTo publishes.
-          // forNumBuckets comes from the HEAD being based on, not this
-          // handle: a concurrent relayout's bucket count must survive
-          // the metadata-only republish (the handle's own count
+          // The bucket count comes from the HEAD being based on, not
+          // this handle: a concurrent relayout's bucket count must
+          // survive the metadata-only republish (the handle's own count
           // describes the layout it was constructed for, which may
           // just have died).
-          writeManifest(Manifest(next, head.buckets, head.schemaJson,
+          writeManifest(Manifest(next, layoutFor(head.layout.numBuckets),
+              head.buckets, head.schemaJson,
               bucketStats = head.bucketStats ++ valid),
-            basedOn = head.commitId,
-            forNumBuckets = head.manifestNumBuckets)
+            basedOn = head.commitId)
           prune()
           last = Some(CommitStats(next, Nil, Nil))
           return valid.size
@@ -1232,7 +1172,7 @@ class BucketedStateTable(
       val manifestId = math.max(next, basedOn + 1)
       val prev = base.map(_.buckets).getOrElse(Map.empty)
       try {
-        writeManifest(Manifest(manifestId,
+        writeManifest(Manifest(manifestId, layoutFor(numBuckets),
           prev -- dirty ++ written.map(_ -> next),
           Some(rows.schema.json),
           // clean buckets CARRY the base's stats; every dirty bucket's
@@ -1266,10 +1206,10 @@ class BucketedStateTable(
           // rebase, not an assertion from inside this catch
           val head = manifestFiles().lastOption
             .map { case (_, p) => readManifest(p, checkLayout = false) }
-          head.filter(_.manifestNumBuckets != numBuckets).foreach { h =>
+          head.filter(_.layout.numBuckets != numBuckets).foreach { h =>
             throw new java.util.ConcurrentModificationException(
               s"commit raced a layout change at $path ($numBuckets -> " +
-                s"${h.manifestNumBuckets} buckets) — this handle is stale; " +
+                s"${h.layout.numBuckets} buckets) — this handle is stale; " +
                 "reopen the table at the recorded layout (BucketedStateTable" +
                 ".snapshotLayout + fromLayout) and retry the mutation")
           }
@@ -1600,7 +1540,8 @@ class BucketedStateTable(
         // metadata-only: no bucket moved, so every recorded zone map
         // still bounds its bucket exactly (the added column simply has
         // no stats anywhere — conservative, never pruned on)
-        writeManifest(Manifest(next, base.buckets, Some(widened.json),
+        writeManifest(Manifest(next, layoutFor(numBuckets), base.buckets,
+            Some(widened.json),
             bucketStats = base.bucketStats),
           basedOn = base.commitId)
         prune()
@@ -1826,7 +1767,8 @@ class BucketedStateTable(
             "createExclusive is the creating commit only")
       val next = nextCommitId()
       beforePublish()
-      writeManifest(Manifest(next, Map.empty, Some(rowSchema.json)),
+      writeManifest(
+        Manifest(next, layoutFor(numBuckets), Map.empty, Some(rowSchema.json)),
         basedOn = 0L)
       last = Some(CommitStats(next, Nil, Nil))
     } }
@@ -1913,10 +1855,11 @@ class BucketedStateTable(
       val next = nextCommitId()
       val written = rewriteSnapshot(snapshot, newNumBuckets, next)
       beforePublish()
-      writeManifest(Manifest(next, written.map(_ -> next).toMap,
+      writeManifest(Manifest(next, layoutFor(newNumBuckets),
+          written.map(_ -> next).toMap,
           snapshot.map(_.schema.json).orElse(cur.flatMap(_.schemaJson)),
           bucketStats = relayoutStats(snapshot, written, next)),
-        basedOn, forNumBuckets = newNumBuckets)
+        basedOn)
       // Truncate pre-rebucket manifests — through the same
       // condemn-then-reap shield prune() uses: a reader that listed a
       // manifest moments ago must still be able to open it and scan its
@@ -1969,12 +1912,13 @@ class BucketedStateTable(
       // publish — the rewrite is stale against it and must WITHDRAW
       // (never rebase: a layout change conflicts with everything)
       beforePublish()
-      writeManifest(Manifest(next, written.map(_ -> next).toMap,
+      writeManifest(Manifest(next, layoutFor(newNumBuckets),
+          written.map(_ -> next).toMap,
           snapshot.map(_.schema.json).orElse(cur.flatMap(_.schemaJson)),
           splitFactor = Some(factor),
           splitBasedOn = Some(basedOn),
           bucketStats = relayoutStats(snapshot, written, next)),
-        basedOn, forNumBuckets = newNumBuckets)
+        basedOn)
       prune()
       new BucketedStateTable(spark, path, keyCols, newNumBuckets,
         keepCommits, retentionFloorMillis, bucketCols, leaseStaleMillis,
@@ -2014,12 +1958,13 @@ class BucketedStateTable(
       // same publish-window discipline as splitBuckets: any interleaved
       // commit withdraws the relayout (its rewrite is stale against it)
       beforePublish()
-      writeManifest(Manifest(next, written.map(_ -> next).toMap,
+      writeManifest(Manifest(next, layoutFor(newNumBuckets),
+          written.map(_ -> next).toMap,
           snapshot.map(_.schema.json).orElse(cur.flatMap(_.schemaJson)),
           splitFactor = Some(-factor),
           splitBasedOn = Some(basedOn),
           bucketStats = relayoutStats(snapshot, written, next)),
-        basedOn, forNumBuckets = newNumBuckets)
+        basedOn)
       prune()
       new BucketedStateTable(spark, path, keyCols, newNumBuckets,
         keepCommits, retentionFloorMillis, bucketCols, leaseStaleMillis,
@@ -2160,6 +2105,95 @@ object BucketedStateTable {
     }.sortBy(_._1)
   }
 
+  /** One parsed `_commits/c<id>.txt` manifest. Plain text, one `k=v`
+    * per line (the split is first-'=' only, so a JSON value parses
+    * back verbatim):
+    * {{{
+    *   commit=<id>                    required
+    *   numBuckets=<n>                 required  (layout)
+    *   bucketCols=<a,b>               required  (layout)
+    *   keyCols=<a,b>                  required  (layout)
+    *   keepCommits=<n>                required  (retention policy)
+    *   retentionFloorMillis=<ms>      required  (retention policy)
+    *   splitFactor=<±f>               a relayout commit only
+    *   splitBasedOn=<id>              a relayout commit only
+    *   statsCols=<a,b>                a stats-recording writer only
+    *   schema=<StructType JSON>       absent only on a relayout of a
+    *                                  never-committed table
+    *   zmap.<bucket>=<JSON>           per-bucket zone map ([[ZoneMaps]])
+    *   <bucket>=<commit>              bucket → data dir pointer
+    * }}}
+    * The layout lines make the manifest the one place a handle-less
+    * writer (the DSv2 SQL surface) learns how to reproduce the owner's
+    * handle. Zone-map payloads stay OPAQUE strings here, decoded on
+    * demand by [[ZoneMaps.decode]]; a bucket absent from `bucketStats`
+    * is simply un-statted — pruning must keep it. */
+  private[pipeline] case class Manifest(commitId: Long, layout: Layout,
+      buckets: Map[Int, Long],
+      schemaJson: Option[String] = None,
+      splitFactor: Option[Int] = None,
+      splitBasedOn: Option[Long] = None,
+      bucketStats: Map[Int, String] = Map.empty)
+
+  /** The ONE writer of the manifest format (see [[Manifest]]). */
+  private[pipeline] def render(m: Manifest): String = {
+    val l = m.layout
+    s"commit=${m.commitId}\nnumBuckets=${l.numBuckets}\n" +
+      s"bucketCols=${l.bucketCols.mkString(",")}\n" +
+      s"keyCols=${l.keyCols.mkString(",")}\n" +
+      s"keepCommits=${l.keepCommits}\n" +
+      s"retentionFloorMillis=${l.retentionFloorMillis}\n" +
+      m.splitFactor.map(f => s"splitFactor=$f\n").getOrElse("") +
+      m.splitBasedOn.map(b => s"splitBasedOn=$b\n").getOrElse("") +
+      (if (l.statsCols.nonEmpty) s"statsCols=${l.statsCols.mkString(",")}\n"
+       else "") +
+      m.schemaJson.map(j => s"schema=$j\n").getOrElse("") +
+      m.bucketStats.toSeq.sortBy(_._1)
+        .map { case (b, j) => s"zmap.$b=$j\n" }.mkString +
+      m.buckets.toSeq.sorted.map { case (b, c) => s"$b=$c\n" }.mkString
+  }
+
+  /** The ONE reader of the manifest format: exactly what [[render]]
+    * writes. A missing required line or a malformed line fails loudly,
+    * naming the manifest at `where` and the offending line. */
+  private[pipeline] def parse(where: Path, text: String): Manifest = {
+    def bad(what: String): Nothing =
+      throw new IllegalStateException(s"manifest $where: $what")
+    val kv = scala.collection.mutable.HashMap.empty[String, String]
+    val buckets = Map.newBuilder[Int, Long]
+    val stats = Map.newBuilder[Int, String]
+    text.linesIterator.filter(_.nonEmpty).foreach { line =>
+      line.split("=", 2) match {
+        case Array(k, v) if k.nonEmpty =>
+          if (k.head.isDigit) buckets += k.toInt -> v.toLong
+          else if (k.startsWith("zmap.")) stats += k.stripPrefix("zmap.").toInt -> v
+          else kv(k) = v
+        case _ => bad(s"malformed line '$line'")
+      }
+    }
+    def req(k: String): String =
+      kv.getOrElse(k, bad(s"required line '$k=' is missing"))
+    def cols(v: String): Seq[String] = v.split(",").toSeq
+    Manifest(req("commit").toLong,
+      Layout(cols(req("keyCols")), cols(req("bucketCols")),
+        req("numBuckets").toInt, req("keepCommits").toInt,
+        req("retentionFloorMillis").toLong,
+        kv.get("statsCols").map(cols).getOrElse(Nil)),
+      buckets.result(),
+      kv.get("schema"),
+      kv.get("splitFactor").map(_.toInt),
+      kv.get("splitBasedOn").map(_.toLong),
+      stats.result())
+  }
+
+  private[pipeline] def readManifest(
+      fs: org.apache.hadoop.fs.FileSystem, p: Path): Manifest = {
+    val in = fs.open(p)
+    val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
+      finally in.close()
+    parse(p, text)
+  }
+
   /** Static marker probe: was (batchId, streamScope) already committed
     * against the table at `path`? The cheap replay pre-check a sink
     * runs BEFORE ferrying a batch the guarded merge would discard
@@ -2212,11 +2246,7 @@ object BucketedStateTable {
     val root = new Path(path)
     val fs = root.getFileSystem(hadoopConf)
     listManifests(fs, root).map { case (id, s) =>
-      val in = fs.open(s.getPath)
-      val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      val buckets = text.linesIterator.count(l => l.nonEmpty && l.head.isDigit)
-      (id, s.getModificationTime, buckets)
+      (id, s.getModificationTime, readManifest(fs, s.getPath).buckets.size)
     }
   }
 
@@ -2233,45 +2263,37 @@ object BucketedStateTable {
     * a pure reader does not care how keys were hashed into buckets. */
   def snapshotPaths(hadoopConf: org.apache.hadoop.conf.Configuration,
       path: String, commit: Option[Long] = None): Seq[String] =
-    chosenManifestText(hadoopConf, path, commit) match {
-      case None => Nil
-      case Some(text) =>
-        val root = new Path(path)
-        text.linesIterator.filter(l => l.nonEmpty && l.head.isDigit).toSeq
-          .map { l => val Array(b, c) = l.split("=", 2); b.toInt -> c.toLong }
-          .sortBy(_._1)
-          .map { case (b, c) =>
-            new Path(root, f"data/c$c%08d/__bucket=$b").toString }
+    chosenManifest(hadoopConf, path, commit).toSeq.flatMap { m =>
+      val root = new Path(path)
+      m.buckets.toSeq.sortBy(_._1).map { case (b, c) =>
+        new Path(root, f"data/c$c%08d/__bucket=$b").toString }
     }
 
   /** The row schema the chosen snapshot recorded (its manifest's
     * `schema=` line) — what lets a committed-but-EMPTY table (e.g. a
     * queue fully drained by `deleteWhereUnmodified`) still present a
     * typed shape to the DSv2 source instead of erroring where
-    * `tableExists` answers true. None when the manifest predates the
-    * schema line or the table never committed. */
+    * `tableExists` answers true. None when the table never committed
+    * or its manifest records no schema (a relayout of a
+    * never-committed table). */
   def snapshotSchema(hadoopConf: org.apache.hadoop.conf.Configuration,
       path: String, commit: Option[Long] = None)
       : Option[org.apache.spark.sql.types.StructType] =
-    chosenManifestText(hadoopConf, path, commit).flatMap { text =>
-      text.linesIterator.find(_.startsWith("schema=")).map { l =>
-        org.apache.spark.sql.types.DataType
-          .fromJson(l.stripPrefix("schema="))
-          .asInstanceOf[org.apache.spark.sql.types.StructType]
-      }
-    }
+    chosenManifest(hadoopConf, path, commit).flatMap(_.schemaJson)
+      .map(schemaOf)
 
   /** The physical layout a writer must reproduce to mutate the table at
-    * `path` — merge key, bucket columns, bucket count — as its newest
-    * manifest records them. This is what lets a handle-less writer (the
-    * DSv2 SQL INSERT surface) construct the exact
-    * [[BucketedStateTable]] instance and go through the real commit
-    * protocol. None when the table never committed or its manifests
-    * predate the `keyCols=` line. */
+    * `path` — merge key, bucket columns, bucket count, and the owner's
+    * retention and zone-map policy — as a manifest records it. This is
+    * what lets a handle-less writer (the DSv2 SQL INSERT surface)
+    * construct the exact [[BucketedStateTable]] instance and go through
+    * the real commit protocol. */
   case class Layout(keyCols: Seq[String], bucketCols: Seq[String],
       numBuckets: Int,
-      keepCommits: Option[Int] = None,
-      retentionFloorMillis: Option[Long] = None,
+      // the owner's RETENTION policy: a SQL write must not prune history
+      // the owning handle was configured to keep
+      keepCommits: Int,
+      retentionFloorMillis: Long,
       // the owner's zone-map policy: a handle-less writer (SQL INSERT/
       // DML) must keep recording the stats the owner's readers prune by
       statsCols: Seq[String] = Nil)
@@ -2279,37 +2301,22 @@ object BucketedStateTable {
   /** Construct the exact instance a recorded layout describes — the ONE
     * place a handle-less consumer (the SQL write surface, the streaming
     * sink, the change-feed source) maps layout lines to constructor
-    * parameters. Manifests that predate the retention-policy lines map
-    * to NEVER-prune: a handle that does not know the owner's policy
-    * must not prune history the owner keeps. */
+    * parameters. */
   def fromLayout(spark: SparkSession, path: String,
       layout: Layout): BucketedStateTable =
     new BucketedStateTable(spark, path,
       keyCols = layout.keyCols, numBuckets = layout.numBuckets,
-      keepCommits = layout.keepCommits.getOrElse(Int.MaxValue),
-      retentionFloorMillis =
-        layout.retentionFloorMillis.getOrElse(Long.MaxValue / 4),
+      keepCommits = layout.keepCommits,
+      retentionFloorMillis = layout.retentionFloorMillis,
       bucketCols =
         if (layout.bucketCols == layout.keyCols) Nil else layout.bucketCols,
       statsCols = layout.statsCols)
 
+  /** The newest manifest's layout; None only when the table never
+    * committed. */
   def snapshotLayout(hadoopConf: org.apache.hadoop.conf.Configuration,
       path: String): Option[Layout] =
-    chosenManifestText(hadoopConf, path, None).flatMap { text =>
-      val kv = text.linesIterator.filter(_.contains("="))
-        .map { l => val Array(k, v) = l.split("=", 2); (k, v) }.toMap
-      for {
-        kc <- kv.get("keyCols")
-        nb <- kv.get("numBuckets")
-      } yield Layout(
-        kc.split(",").toSeq,
-        kv.get("bucketCols").map(_.split(",").toSeq)
-          .getOrElse(kc.split(",").toSeq),
-        nb.toInt,
-        kv.get("keepCommits").map(_.toInt),
-        kv.get("retentionFloorMillis").map(_.toLong),
-        kv.get("statsCols").map(_.split(",").toSeq).getOrElse(Nil))
-    }
+    chosenManifest(hadoopConf, path, None).map(_.layout)
 
   /** Everything the DSv2 scan needs to bucket-prune a snapshot from
     * pushed-down filters without a table handle: the chosen manifest's
@@ -2342,53 +2349,34 @@ object BucketedStateTable {
     * to None and the consumer must treat its cost as unknown. The
     * manifest FILE is immutable, but a withdrawn id can be reused by a
     * later publish — memoize by the (id, length, mtime) triple from
-    * [[snapshotCommitStats]], never by id alone. */
+    * [[snapshotCommitStats]], never by id alone. None when `commit` is
+    * no longer retained. */
   def snapshotPointersAndCounts(
       hadoopConf: org.apache.hadoop.conf.Configuration,
       path: String, commit: Long)
       : Option[(Map[Int, Long], Map[Int, Option[Long]])] =
-    (try chosenManifestText(hadoopConf, path, Some(commit))
+    (try chosenManifest(hadoopConf, path, Some(commit))
      catch { case _: NoSuchElementException => None } // pruned: unknown
-    ).map { text =>
-      val lines = text.linesIterator.filter(_.nonEmpty).toSeq
-      val ptrs = lines.filter(_.head.isDigit).map { l =>
-        val Array(b, c) = l.split("=", 2); b.toInt -> c.toLong }.toMap
-      val counts = lines.filter(_.startsWith("zmap.")).flatMap { l =>
-        val Array(k, j) = l.split("=", 2)
-        ZoneMaps.decode(j).map(s =>
-          k.stripPrefix("zmap.").toInt -> s.rows)
-      }.toMap
-      (ptrs, ptrs.keySet.map(b => b -> counts.get(b)).toMap)
+    ).map { m =>
+      (m.buckets, m.buckets.map { case (b, _) =>
+        b -> m.bucketStats.get(b).flatMap(ZoneMaps.decode).map(_.rows) })
     }
 
   def snapshotZoneInfo(hadoopConf: org.apache.hadoop.conf.Configuration,
       path: String, commit: Option[Long] = None): Option[ZoneInfo] =
-    chosenManifestText(hadoopConf, path, commit).flatMap { text =>
-      val lines = text.linesIterator.filter(_.nonEmpty).toSeq
-      val kv = lines.map { l =>
-        val Array(k, v) = l.split("=", 2); (k, v) }.toMap
-      kv.get("numBuckets").map(_.toInt).map { nb =>
-        val kc = kv.get("keyCols").map(_.split(",").toSeq).getOrElse(Nil)
-        ZoneInfo(path,
-          lines.filter(l => l.head.isDigit).map { l =>
-            val Array(b, c) = l.split("=", 2); b.toInt -> c.toLong }.toMap,
-          lines.filter(_.startsWith("zmap.")).flatMap { l =>
-            val Array(k, j) = l.split("=", 2)
-            ZoneMaps.decode(j).map(k.stripPrefix("zmap.").toInt -> _)
-          }.toMap,
-          kv.get("bucketCols").map(_.split(",").toSeq).getOrElse(kc), nb,
-          kv.get("schema").map(j => org.apache.spark.sql.types.DataType
-            .fromJson(j)
-            .asInstanceOf[org.apache.spark.sql.types.StructType]))
-      }
+    chosenManifest(hadoopConf, path, commit).map { m =>
+      ZoneInfo(path, m.buckets,
+        m.bucketStats.flatMap { case (b, j) => ZoneMaps.decode(j).map(b -> _) },
+        m.layout.bucketCols, m.layout.numBuckets, m.schemaJson.map(schemaOf))
     }
 
-  /** Full text of the chosen manifest (newest, or `commit`'s) — one
-    * read shared by [[snapshotPaths]] and [[snapshotSchema]] so both
-    * views of a snapshot come from the SAME immutable file. */
-  private def chosenManifestText(
+  /** The chosen manifest (newest, or `commit`'s) — one read shared by
+    * every static view, so all views of a snapshot come from the SAME
+    * immutable file. None when the table never committed; a `commit`
+    * that is not retained throws NoSuchElementException. */
+  private def chosenManifest(
       hadoopConf: org.apache.hadoop.conf.Configuration,
-      path: String, commit: Option[Long]): Option[String] = {
+      path: String, commit: Option[Long]): Option[Manifest] = {
     val root = new Path(path)
     val fs = root.getFileSystem(hadoopConf)
     val manifests = listManifests(fs, root).map { case (id, s) => id -> s.getPath }
@@ -2402,8 +2390,10 @@ object BucketedStateTable {
         case None => return None
       }
     }
-    val in = fs.open(chosen)
-    Some(try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close())
+    Some(readManifest(fs, chosen))
   }
+
+  private def schemaOf(json: String): org.apache.spark.sql.types.StructType =
+    org.apache.spark.sql.types.DataType.fromJson(json)
+      .asInstanceOf[org.apache.spark.sql.types.StructType]
 }

@@ -30,7 +30,11 @@ class MgSummaryStore(spark: SparkSession, rootDir: String) {
 
   private val root = new Path(rootDir)
   private val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-  private def lockKey = "mgstore:" + root.toString
+  // one key per directory however it is spelled (`/x`, `file:/x`,
+  // `file:///x`): handles on one store must share the lock, or both
+  // publish the same next version and one update is lost
+  private val lockKey = "mgstore:" +
+    fs.makeQualified(Path.getPathWithoutSchemeAndAuthority(root))
 
   private def versions(): Seq[(Long, Path)] =
     if (!fs.exists(root)) Nil
@@ -93,14 +97,7 @@ class MgSummaryStore(spark: SparkSession, rootDir: String) {
       require(!streamScope.exists(c => c == '\t' || c == '\n' || c == '\r'),
         s"streamScope must not contain tab/newline: '$streamScope'")
       val applied = appliedMap()
-      // Legacy fallback: stores written before the in-file `#applied`
-      // headers recorded replays as separate `BatchMarkers` files. A
-      // stream restarted across that upgrade finds an empty appliedMap
-      // and would re-merge its last committed batch — the permanent
-      // double-count this guard exists to prevent — so a header miss
-      // still consults any legacy marker before applying.
-      if (applied.getOrElse(streamScope, Set.empty).contains(batchId) ||
-          BatchMarkers.seen(fs, root, batchId, streamScope)) false
+      if (applied.getOrElse(streamScope, Set.empty).contains(batchId)) false
       else {
         val next = update(read())
         // a newline inside an item would split the TSV row and make the

@@ -20,9 +20,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   *    ([[VersionedSlotStore]]) in which every conditional write is a
   *    rename-refusing-existing election on the next version name —
   *    a true CAS wherever rename is atomic (HDFS is), and a holder's
-  *    refresh NEVER passes through an absent slot (the pre-r19
-  *    delete-then-rename window that let a waiter claim a LIVE
-  *    holder's slot mid-heartbeat is gone).
+  *    refresh NEVER passes through an absent slot.
   *  - [[InMemoryCasStore]] — a genuinely atomic value-CAS
   *    (AtomicReference), the reference implementation an object-store
   *    adapter (S3 If-Match, GCS generation preconditions, etcd) should
@@ -76,10 +74,9 @@ trait LeaseStore {
   *    a [[VersionedSlotStore]] at `path` (a DIRECTORY of version
   *    files). There the version-name rename election makes every
   *    conditional write a true CAS wherever rename-refusing-existing
-  *    is atomic (HDFS's namenode rename is), and — the r19 fix — a
-  *    holder's heartbeat refresh never passes through an ABSENT slot,
-  *    so a polling waiter can no longer claim a LIVE holder's slot
-  *    mid-refresh (the old delete-then-rename overwrite's window).
+  *    is atomic (HDFS's namenode rename is), and a holder's heartbeat
+  *    refresh never passes through an ABSENT slot, so a polling
+  *    waiter cannot claim a LIVE holder's slot mid-refresh.
   *
   * Correctness never rests on the lease — the manifest `basedOn`
   * check fences the loser — the lease only converts retry storms
@@ -100,15 +97,6 @@ final class HadoopLeaseStore(fs: FileSystem, path: Path) extends LeaseStore {
     if (localFile(path).isDefined) None
     else Some(new VersionedSlotStore(fs, path))
 
-  /** Drop a stale ChecksumFileSystem sidecar after a raw-nio publish:
-    * the lease value never goes through `fs.create` on the local FS
-    * anymore, so a leftover `.name.crc` from an older writer would
-    * mismatch and fail reads forever. */
-  private def dropCrcSidecar(dst: java.io.File): Unit = {
-    val crc = new java.io.File(dst.getParentFile, s".${dst.getName}.crc")
-    if (crc.exists()) crc.delete()
-  }
-
   private def tmpFor(dst: java.io.File): java.io.File =
     new java.io.File(dst.getParentFile,
       s".${dst.getName}.tmp.${java.util.UUID.randomUUID()}")
@@ -123,7 +111,6 @@ final class HadoopLeaseStore(fs: FileSystem, path: Path) extends LeaseStore {
         java.nio.file.Files.write(tmp.toPath, content)
         try {
           java.nio.file.Files.createLink(dst.toPath, tmp.toPath)
-          dropCrcSidecar(dst)
           true
         } catch {
           // the existence signal — the slot is held
@@ -168,7 +155,6 @@ final class HadoopLeaseStore(fs: FileSystem, path: Path) extends LeaseStore {
             java.nio.file.Files.move(tmp.toPath, dst.toPath,
               java.nio.file.StandardCopyOption.ATOMIC_MOVE,
               java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-            dropCrcSidecar(dst)
             true
           } finally java.nio.file.Files.deleteIfExists(tmp.toPath)
         }
@@ -218,16 +204,13 @@ final class HadoopLeaseStore(fs: FileSystem, path: Path) extends LeaseStore {
   * The property this layout buys over a single overwritten file
   * (HDFS rename refuses an existing destination, forcing
   * delete-then-rename): '''no transition ever passes through an
-  * observable ABSENT state''' (sole exception: the one-time migration
-  * of a pre-r19 single-file slot, see `publish`). A holder's
-  * heartbeat refresh publishes
+  * observable ABSENT state'''. A holder's heartbeat refresh publishes
   * v(n+1) while v(n) still exists; readers take the max, so they see
-  * the old value or the new value, never a holderless slot — the
-  * pre-r19 window in which a polling waiter could legitimately claim
-  * a LIVE holder's slot mid-refresh is structurally gone. Even a
-  * conditional DELETE publishes (a tombstone) rather than removing,
-  * so a racing `tryCreate` must still win the next version's
-  * election.
+  * the old value or the new value, never a holderless slot — a
+  * polling waiter can never legitimately claim a LIVE holder's slot
+  * mid-refresh. Even a conditional DELETE publishes (a tombstone)
+  * rather than removing, so a racing `tryCreate` must still win the
+  * next version's election.
   *
   * Old versions are garbage-collected after each successful publish
   * (best-effort — readers take the max, so residue is harmless; a
@@ -238,20 +221,6 @@ final class VersionedSlotStore(fs: FileSystem, dir: Path) extends LeaseStore {
   private val VersionName = raw"v(\d{19})".r
 
   private def fileFor(v: Long): Path = new Path(dir, f"v$v%019d")
-
-  /** Pre-r19 layouts left the lease as a single FILE at `dir`; the
-    * versioned layout needs a DIRECTORY there. The legacy value reads
-    * as version 0 (so conditional ops can judge and break it), and the
-    * first publish migrates: it wins a one-time rename-aside election
-    * on the file, then creates the directory. Without this, a live or
-    * crashed old-layout holder would read as ABSENT and every publish
-    * would fail against the occupying file — a permanently wedged slot
-    * after an upgrade. */
-  private def legacyFile(): Option[org.apache.hadoop.fs.FileStatus] =
-    try {
-      val st = fs.getFileStatus(dir)
-      if (st.isFile) Some(st) else None
-    } catch { case _: java.io.FileNotFoundException => None }
 
   private def readFully(p: Path): Array[Byte] = {
     val in = fs.open(p)
@@ -265,10 +234,9 @@ final class VersionedSlotStore(fs: FileSystem, dir: Path) extends LeaseStore {
   }
 
   /** (version, bytes) of the highest published version; None when the
-    * slot directory is missing or holds no version file. A pre-r19
-    * single-file slot reads as version 0. Retries when the top version
-    * is GC'd between list and open (progress proof: each retry means a
-    * strictly newer version was published). */
+    * slot directory is missing or holds no version file. Retries when
+    * the top version is GC'd between list and open (progress proof:
+    * each retry means a strictly newer version was published). */
   private def scan(): Option[(Long, Array[Byte])] = {
     var attempts = 0
     while (attempts < 64) {
@@ -276,40 +244,18 @@ final class VersionedSlotStore(fs: FileSystem, dir: Path) extends LeaseStore {
       val listed =
         try fs.listStatus(dir)
         catch { case _: java.io.FileNotFoundException => return None }
-      // legacy single-file slot: listStatus on a FILE path returns that
-      // file's own status (no extra getFileStatus round-trip per scan —
-      // reads and heartbeats stay one namenode RPC). A version file can
-      // never alias this shape: their names are v-prefixed, not the
-      // slot's own name.
-      if (listed.length == 1 && listed(0).isFile &&
-          listed(0).getPath.getName == dir.getName) {
-        try return Some((0L, readFully(dir)))
-        catch {
-          // migrated (renamed aside) between the list and the read —
-          // the directory layout exists now (or is being laid). Loop
-          // back for a FRESH listing: the stale single-entry list has
-          // no version names and would mis-answer None for a live
-          // slot. Only FileNotFound means "migrated" (open on a
-          // directory throws it on both local FS and HDFS); any other
-          // IOException is a transient store failure and PROPAGATES
-          // per the LeaseStore error contract — a blip must never
-          // read as "absent".
-          case _: java.io.FileNotFoundException => ()
+      var top = -1L
+      listed.foreach { st =>
+        st.getPath.getName match {
+          case VersionName(d) => val v = d.toLong; if (v > top) top = v
+          case _ => ()
         }
-      } else {
-        var top = -1L
-        listed.foreach { st =>
-          st.getPath.getName match {
-            case VersionName(d) => val v = d.toLong; if (v > top) top = v
-            case _ => ()
-          }
-        }
-        if (top < 0L) return None
-        try return Some((top, readFully(fileFor(top))))
-        catch {
-          // GC'd under us — a newer version exists; rescan
-          case _: java.io.FileNotFoundException => ()
-        }
+      }
+      if (top < 0L) return None
+      try return Some((top, readFully(fileFor(top))))
+      catch {
+        // GC'd under us — a newer version exists; rescan
+        case _: java.io.FileNotFoundException => ()
       }
     }
     // pathological churn: surface as the transient-failure arm of the
@@ -333,92 +279,23 @@ final class VersionedSlotStore(fs: FileSystem, dir: Path) extends LeaseStore {
     * vanishes without a successor), therefore: top == v after the
     * rename ⟺ the win is genuine; top > v ⟹ withdraw (the file is
     * invisible to readers, who take the max) and report the loss. */
-  private def publish(v: Long, content: Array[Byte],
-      judged: Array[Byte]): Boolean = {
-    // one-time legacy migration (see [[legacyFile]]): win the
-    // rename-aside election on the pre-r19 single-file slot, VERIFY
-    // the win, then lay the directory down. The migration is the ONLY
-    // transition that passes through an observable ABSENT window —
-    // once per upgraded slot, never per heartbeat. Two post-rename
-    // verifications keep the election honest:
-    //  - the renamed-aside object must be a FILE: a racer that
-    //    migrated between our probe and our rename leaves a LIVE
-    //    versioned DIRECTORY at the slot, and renaming THAT aside
-    //    would destroy the racer's current lease — restore and lose;
-    //  - its bytes must still equal `judged` (what the caller's scan
-    //    observed): a live pre-r19 holder's in-place refresh landing
-    //    between judgment and rename must defeat the break, the same
-    //    value-conditional contract every other transition honors.
-    val asideOpt: Option[Path] =
-      if (legacyFile().isDefined) {
-        val aside = new Path(dir.getParent,
-          s"${dir.getName}.legacy.${java.util.UUID.randomUUID()}")
-        if (!fs.rename(dir, aside)) return false // a racer migrated first
-        // From here until the verified win, ANY failure must put the
-        // slot back before surfacing — a thrown blip after the rename
-        // would otherwise leave the live lease marooned under a UUID
-        // name and the slot reading absent.
-        val intact =
-          try {
-            val asideIsFile =
-              try fs.getFileStatus(aside).isFile
-              catch { case _: java.io.FileNotFoundException => false }
-            asideIsFile && java.util.Arrays.equals(readFully(aside), judged)
-          } catch {
-            case e: java.io.IOException => restoreAside(aside); throw e
-          }
-        if (!intact) { restoreAside(aside); return false }
-        // the verified legacy bytes stay renamed-aside until a
-        // replacement VERSION FILE is durably in place — deleting them
-        // here would let a crash or transient IOException in the
-        // following mkdirs/create/rename destroy the lease value
-        // permanently while the slot reads absent (r19 ADVICE)
-        Some(aside)
-      } else None
-    // exception-path rollback for the migration: put the legacy file
-    // back ONLY if the slot can be emptied without touching anyone
-    // else's work — we delete OUR tmp file (exact name) and then the
-    // directory NON-recursively, which the filesystem refuses if any
-    // other object (a racer's version file, a racer's tmp) landed in
-    // the window. A recursive delete here could destroy a racer's
-    // just-won lease between our emptiness check and the delete —
-    // check-then-delete is not atomic; delete-if-empty is. If the dir
-    // cannot be emptied, a racer owns the slot and the aside stays as
-    // inspectable residue. Best-effort: we are already surfacing the
-    // original exception.
+  private def publish(v: Long, content: Array[Byte]): Boolean = {
     val dst = fileFor(v)
     val tmp = new Path(dir, s".v.tmp.${java.util.UUID.randomUUID()}")
-    def rollbackMigration(): Unit = asideOpt.foreach { aside =>
-      try {
-        try fs.delete(tmp, false)
-        catch { case _: java.io.IOException => () }
-        if (!fs.exists(dir) || fs.delete(dir, false)) restoreAside(aside)
-      } catch { case _: java.io.IOException => () }
-    }
+    fs.mkdirs(dir)
+    val out = fs.create(tmp, false)
+    try out.write(content) finally out.close()
     val renamed =
       try {
-        fs.mkdirs(dir)
-        val out = fs.create(tmp, false)
-        try out.write(content) finally out.close()
-        try {
-          if (fs.rename(tmp, dst)) true
-          else if (fs.exists(dst)) false
-          else throw new java.io.IOException(
-            s"lease publish: rename($tmp -> $dst) refused with no " +
-              "existing destination")
-        } finally {
-          try fs.delete(tmp, false)
-          catch { case _: java.io.IOException => () } // residue harmless
-        }
-      } catch { case e: Throwable => rollbackMigration(); throw e }
-    // migration completes only now: either our version file is durably
-    // named, or a racer's is (renamed == false ⟹ dst already existed)
-    // — in both cases the slot holds a successor and the aside bytes
-    // are superseded
-    asideOpt.foreach { aside =>
-      try fs.delete(aside, false)
-      catch { case _: java.io.IOException => () } // residue harmless
-    }
+        if (fs.rename(tmp, dst)) true
+        else if (fs.exists(dst)) false
+        else throw new java.io.IOException(
+          s"lease publish: rename($tmp -> $dst) refused with no " +
+            "existing destination")
+      } finally {
+        try fs.delete(tmp, false)
+        catch { case _: java.io.IOException => () } // residue harmless
+      }
     val won = renamed && {
       val stillTop = !fs.listStatus(dir).exists(st =>
         st.getPath.getName match {
@@ -435,37 +312,6 @@ final class VersionedSlotStore(fs: FileSystem, dir: Path) extends LeaseStore {
     }
     if (won) gcBelow(v)
     won
-  }
-
-  /** Undo a migration rename-aside: the slot must currently be ABSENT
-    * for the restore to mean "exactly as we found it" — Hadoop rename
-    * into an EXISTING directory succeeds by NESTING the source inside
-    * it (burying a racer's live slot or the legacy lease), so a
-    * rebuilt slot fails the restore loudly instead; if a racer slips
-    * in between the check and the rename, the nested object is pulled
-    * back out before failing, so nothing is ever silently buried.
-    * Correctness under the loud failure is backed by the manifest
-    * `basedOn` fence, as for every lease anomaly. */
-  private def restoreAside(aside: Path): Unit = {
-    def fail(): Nothing = throw new java.io.IOException(
-      s"lease slot $dir: could not restore the renamed-aside slot " +
-        s"$aside — a concurrent writer rebuilt the slot; manual " +
-        "cleanup of the aside object may be needed")
-    val occupied =
-      try { fs.getFileStatus(dir); true }
-      catch { case _: java.io.FileNotFoundException => false }
-    if (occupied || !fs.rename(aside, dir)) fail()
-    val nested = new Path(dir, aside.getName)
-    val wasNested =
-      try { fs.getFileStatus(nested); true }
-      catch { case _: java.io.FileNotFoundException => false }
-    if (wasNested) {
-      // a racer rebuilt the slot between the check and the rename and
-      // our restore nested into it — pull it back out, then fail loud
-      try fs.rename(nested, aside)
-      catch { case _: java.io.IOException => () }
-      fail()
-    }
   }
 
   /** Best-effort GC of versions `< v` — failures are harmless (readers
@@ -492,9 +338,8 @@ final class VersionedSlotStore(fs: FileSystem, dir: Path) extends LeaseStore {
     requireNonEmpty(content)
     scan() match {
       case Some((_, bytes)) if bytes.nonEmpty => false // held
-      case Some((v, bytes)) => // tombstone → elect next
-        publish(v + 1, content, judged = bytes)
-      case None => publish(1L, content, judged = Array.emptyByteArray)
+      case Some((v, _)) => publish(v + 1, content) // tombstone → elect next
+      case None => publish(1L, content)
     }
   }
 
@@ -506,7 +351,7 @@ final class VersionedSlotStore(fs: FileSystem, dir: Path) extends LeaseStore {
     scan() match {
       case Some((v, bytes))
           if bytes.nonEmpty && java.util.Arrays.equals(bytes, expect) =>
-        publish(v + 1, next, judged = bytes)
+        publish(v + 1, next)
       case _ => false
     }
   }
@@ -518,7 +363,7 @@ final class VersionedSlotStore(fs: FileSystem, dir: Path) extends LeaseStore {
     scan() match {
       case Some((v, bytes))
           if bytes.nonEmpty && java.util.Arrays.equals(bytes, expect) =>
-        publish(v + 1, Array.emptyByteArray, judged = bytes) // published "absent"
+        publish(v + 1, Array.emptyByteArray) // published "absent"
       case _ => false
     }
 }

@@ -563,10 +563,7 @@ private[sources] class GraftStateChangesSource(
   private def table(): BucketedStateTable = {
     val layout = BucketedStateTable.snapshotLayout(conf, path)
       .getOrElse(throw new IllegalStateException(
-        s"graft-state-changes at $path: manifest lost its layout lines"))
-    // fromLayout (never-prune defaults for missing policy lines): this
-    // handle is read-only today, but a future mutation through it must
-    // not prune history the owner configured to keep
+        s"graft-state-changes at $path: the table has no committed manifest"))
     BucketedStateTable.fromLayout(spark, path, layout)
   }
 

@@ -105,8 +105,7 @@ object GraftStateSource {
     // files under the narrower pre-widening shape — footer sampling
     // would present whichever file it lands on, while the recorded
     // schema null-fills the missing columns deterministically. The
-    // error is reserved for the truly-never-committed (or
-    // pre-schema-manifest, which falls back to footer inference) case.
+    // error is reserved for the truly-never-committed case.
     val z = zi.getOrElse(
       throw new IllegalArgumentException(
         s"graft-state table at $path has no committed snapshot" +
@@ -182,9 +181,7 @@ class GraftStateSqlTable(
   // Merge-key columns are the ROW IDENTITY — declared non-null so the
   // row-level rewrite accepts them as rowId attributes
   // (NULLABLE_ROW_ID_ATTRIBUTES otherwise); the commit protocol never
-  // admits a null key. Tables whose manifests predate the layout lines
-  // keep the delegate schema (and refuse row-level DML with the
-  // no-recorded-layout message).
+  // admits a null key.
   private lazy val layoutKeyCols: Set[String] = BucketedStateTable
     .snapshotLayout(
       SparkSession.active.sessionState.newHadoopConf(), rootPath)
@@ -210,23 +207,21 @@ class GraftStateSqlTable(
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new GraftZonePrunedScanBuilder(rootPath, zoneInfo, options, delegate)
 
-  /** The library-side table this SQL surface mutates through, laid out
-    * exactly as the manifest records — ONE manifest read per statement.
-    * Retention policy comes from the manifest too: a SQL write must
-    * never prune history the owning handle was configured to keep, so
-    * manifests that predate the policy lines get a never-prune handle
-    * (cleanup stays with the library writers that know the policy). */
-  /** The recorded layout, or the ONE no-recorded-layout refusal every
+  /** The recorded layout, or the ONE never-committed refusal every
     * SQL write path shares (INSERT and the row-level delta rewrite must
     * never drift in wording or contract). */
   private[sources] def layoutOrRefuse(
       conf: org.apache.hadoop.conf.Configuration): BucketedStateTable.Layout =
     BucketedStateTable.snapshotLayout(conf, rootPath).getOrElse(
       throw new UnsupportedOperationException(
-        s"graft-state table at $rootPath has no recorded layout " +
-          "(keyCols manifest line) — its manifests predate the " +
-          "SQL write surface; one library merge() refreshes it"))
+        s"graft-state table at $rootPath has never committed — there " +
+          "is no recorded layout to write through; create it with a " +
+          "library merge() first"))
 
+  /** The library-side table this SQL surface mutates through, laid out
+    * exactly as the manifest records — ONE manifest read per statement.
+    * Retention policy comes from the manifest too: a SQL write must
+    * never prune history the owning handle was configured to keep. */
   private[sources] def stateTable(
       spark: SparkSession): (BucketedStateTable, BucketedStateTable.Layout) = {
     val layout = layoutOrRefuse(spark.sessionState.newHadoopConf())

@@ -50,17 +50,11 @@ private[streaming] case class SessionState(
   * state as microseconds). Each changes the keyed-state encoder
   * schema of every funnel stream.
   * Structured Streaming's state-schema compatibility check REFUSES to
-  * restart a pre-r18 funnel checkpoint against this class (and with
-  * the check disabled the old 2-field rows would mis-decode). The
-  * upgrade path is [[FunnelCheckpointMigration]] (r20): an offline
-  * rewrite of the stopped checkpoint that scales the legacy millisecond
-  * stamp to micros and seeds `seenUs = lastUs` — the tightest floor the
-  * old state proves, since it never recorded the max-seen stamp (a TTL
-  * enabled post-migration can evict up to one TTL early for users whose
-  * newest event never advanced a stage; the conservative direction).
-  * Without migration: a NEW checkpoint directory plus re-reading the
-  * source from an earlier offset rebuilds equivalent state (the fold is
-  * deterministic), minus any source retention that already aged out.
+  * restart a pre-r18/r19 funnel checkpoint against this class (and
+  * with the check disabled the old rows would mis-decode). Recovery is
+  * a NEW checkpoint directory plus re-reading the source from an
+  * earlier offset: the fold is deterministic, so the replay rebuilds
+  * equivalent state, minus any source retention that already aged out.
   * The default value here only covers fresh Scala construction, not
   * checkpoint decode. */
 private[streaming] case class FunnelState(stage: Int, lastUs: Long,
@@ -299,10 +293,10 @@ object EventStreams {
     * advanced on it. Size the watermark lag, not just the TTL, to
     * the lateness the report must absorb.
     *
-    * UPGRADE NOTE: restarting from a checkpoint written before r18
-    * fails the state-schema check — run [[FunnelCheckpointMigration]]
-    * on the stopped checkpoint first (see [[FunnelState]]; the same
-    * applies to [[funnelCountsStream]]). */
+    * UPGRADE NOTE: restarting from a checkpoint written before r18/r19
+    * fails Spark's state-schema check; recover with a new checkpoint
+    * directory and a replay from the source (see [[FunnelState]]; the
+    * same applies to [[funnelCountsStream]]). */
   def funnelStream(
       spark: SparkSession,
       events: Dataset[Event],

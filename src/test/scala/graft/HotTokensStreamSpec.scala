@@ -147,28 +147,38 @@ class HotTokensStreamSpec extends SparkSpec {
       Sketches.MgSummary(999L, Array("bogus"), Array(999L))))
   }
 
-  test("a legacy BatchMarkers file (pre-header store) still blocks a replay") {
-    val root = Files.createTempDirectory("graft-hot-legacy").toString
-    val store = new MgSummaryStore(spark, s"$root/summary")
-    assert(store.updateOnceForBatch(7L, "ck")(_ =>
-      Sketches.MgSummary(10L, Array("x"), Array(10L))))
-    // simulate the pre-upgrade marker layout: batch 8 was committed by
-    // the OLD store version as a _batches/<scope-hash>/batchNNN file,
-    // so the new in-file '#applied' headers know nothing about it
-    val scopeDir = new java.io.File(s"$root/summary/_batches/" +
-      java.lang.Long.toHexString(
-        scala.util.hashing.MurmurHash3.stringHash("ck").toLong & 0xffffffffL))
-    assert(scopeDir.mkdirs())
-    assert(new java.io.File(scopeDir, f"batch${8L}%012d").createNewFile())
-    // the upgraded store must consult the legacy marker on a header
-    // miss — replaying batch 8 would double-count the sketch forever
-    assert(!store.updateOnceForBatch(8L, "ck")(_ =>
-      Sketches.MgSummary(999L, Array("bogus"), Array(999L))),
-      "legacy-marked batch replayed after the header upgrade")
-    assert(store.read().get.total == 10L)
-    // an actually-new batch still runs
-    assert(store.updateOnceForBatch(9L, "ck")(prev =>
-      Sketches.mergeSummaries(prev.get,
-        Sketches.MgSummary(1L, Array("x"), Array(1L)), 8)))
+  test("two handles spelling one store path differently share one lock: concurrent updates lose nothing") {
+    val root = Files.createTempDirectory("graft-hot-lock").toString
+    // `/x` and `file:/x` name the same directory; a lock keyed on the
+    // raw spelling let both handles publish the same next version
+    val handles = Seq(new MgSummaryStore(spark, s"$root/summary"),
+      new MgSummaryStore(spark, s"file:$root/summary"))
+    val threads = 8
+    val perThread = 4
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val workers = (0 until threads).map { t =>
+      val th = new Thread(() => {
+        try {
+          start.await()
+          (0 until perThread).foreach { i =>
+            val batchId = (t * perThread + i).toLong
+            val w = batchId + 1
+            assert(handles(t % 2).updateOnceForBatch(batchId, "s") { prev =>
+              val add = Sketches.MgSummary(w, Array("x"), Array(w))
+              prev.fold(add)(Sketches.mergeSummaries(_, add, 8))
+            })
+          }
+        } catch { case e: Throwable => failures.add(e) }
+      })
+      th.start()
+      th
+    }
+    start.countDown()
+    workers.foreach(_.join(60_000))
+    assert(failures.isEmpty, String.valueOf(failures.peek()))
+    val n = threads * perThread
+    assert(handles(0).read().get.total == n.toLong * (n + 1) / 2,
+      "a concurrent update was lost")
   }
 }

@@ -168,6 +168,40 @@ class WriterLeaseSpec extends SparkSpec {
       "existence must answer false, not throw")
   }
 
+  test("HadoopLeaseStore on LocalFileSystem: a full lease cycle never leaves a .crc sidecar beside _lease") {
+    // the local slot publishes through raw java.nio, never through the
+    // checksummed fs.create, so no writer leaves a sidecar that could
+    // later mismatch the lease bytes
+    val dir = Files.createTempDirectory("graft-lease-crc").toString
+    val p = new Path(s"$dir/_lease")
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(fs.isInstanceOf[org.apache.hadoop.fs.LocalFileSystem])
+    val store = new HadoopLeaseStore(fs, p)
+    val clock = new java.util.concurrent.atomic.AtomicLong(0L)
+    val lease = new WriterLease(store, "spec", staleMillis = 1000L,
+      acquireTimeoutMillis = 60_000L, pollMillis = 1L,
+      clock = () => clock.get())
+    def noCrc(step: String): Unit = {
+      val crcs = new java.io.File(dir).list().filter(_.endsWith(".crc"))
+      assert(crcs.isEmpty, s"after $step: ${crcs.mkString(",")}")
+    }
+    val hA = lease.acquire("writerA")
+    assert(new java.io.File(dir, "_lease").isFile, "the local single-file slot")
+    noCrc("acquire")
+    clock.set(500L)
+    assert(hA.beat())
+    noCrc("heartbeat")
+    clock.set(5000L)
+    val hB = lease.acquire("writerB") // A's stamp is stale: takeover
+    assert(new String(store.read().get, "UTF-8").startsWith("writerB\n"))
+    noCrc("stale takeover")
+    hA.release()
+    assert(store.read().isDefined, "the usurped release must not free B's slot")
+    hB.release()
+    assert(store.read().isEmpty)
+    noCrc("release")
+  }
+
   test("HadoopLeaseStore: the FS fallback keeps the tombstone election and value-conditioned ops") {
     val dir = Files.createTempDirectory("graft-lease-store").toString
     val p = new Path(s"$dir/_lease")
@@ -429,91 +463,6 @@ class WriterLeaseSpec extends SparkSpec {
     assert(holderStore.replaceIf(c, "holder\n4\n".getBytes("UTF-8")))
     assert(holderStore.deleteIf("holder\n4\n".getBytes("UTF-8")))
     assert(holderStore.read().isEmpty)
-  }
-
-  test("VersionedSlotStore: a pre-r19 single-FILE slot reads as the live value and migrates on the first conditional write") {
-    // upgrade path: the old layout left a plain file at <root>/_lease;
-    // the versioned store must neither read it as ABSENT (a waiter
-    // would instantly break a live holder) nor wedge every publish
-    // against the occupying file
-    val dir = Files.createTempDirectory("graft-lease-vslot-legacy").toString
-    val p = new Path(s"$dir/_lease")
-    val fs = new HdfsSemanticsFs(
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration))
-    val legacy = "oldholder\n0\n".getBytes("UTF-8")
-    val out = fs.create(p, false)
-    try out.write(legacy) finally out.close()
-
-    val store = new HadoopLeaseStore(fs, p)
-    assert(java.util.Arrays.equals(store.read().get, legacy),
-      "the legacy file's value must be visible, not ABSENT")
-    assert(!store.tryCreate("x\n1\n".getBytes("UTF-8")),
-      "create-if-absent must refuse while the legacy value is live")
-
-    // the stale break migrates: rename-aside election, then v1
-    val mine = "newholder\n5\n".getBytes("UTF-8")
-    assert(store.takeOver(legacy, mine))
-    assert(java.util.Arrays.equals(store.read().get, mine))
-    assert(fs.getFileStatus(p).isDirectory,
-      "after migration the slot is the versioned directory layout")
-    // normal life continues on the migrated slot
-    val nxt = "newholder\n6\n".getBytes("UTF-8")
-    assert(store.replaceIf(mine, nxt))
-    assert(store.deleteIf(nxt))
-    assert(store.read().isEmpty)
-    assert(store.tryCreate("again\n7\n".getBytes("UTF-8")))
-  }
-
-  test("legacy migration crash between aside and version publish restores the legacy file — the lease value is never destroyed") {
-    // r19 ADVICE: the migration deleted the verified renamed-aside
-    // legacy file BEFORE the first version file landed, so a crash in
-    // the following mkdirs/create/rename destroyed the lease value
-    // permanently and left the slot observably absent. The aside must
-    // outlive the window, and the failure path must roll the slot back.
-    val dir = Files.createTempDirectory("graft-lease-mig-crash").toString
-    val p = new Path(s"$dir/_lease")
-    val fs = new CrashOnTmpCreateFs(
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration))
-    val legacy = "oldholder\n0\n".getBytes("UTF-8")
-    val out = fs.create(p, false)
-    try out.write(legacy) finally out.close()
-    val store = new HadoopLeaseStore(fs, p)
-
-    fs.failTmpCreates = true
-    val mine = "newholder\n5\n".getBytes("UTF-8")
-    intercept[java.io.IOException](store.takeOver(legacy, mine))
-    // the slot reads the legacy value again — NOT absent, NOT marooned
-    assert(store.read().exists(java.util.Arrays.equals(_, legacy)),
-      "legacy value lost across the failed migration")
-    assert(fs.getFileStatus(p).isFile,
-      "slot must roll back to the legacy single-file layout")
-    val residue = fs.listStatus(p.getParent).map(_.getPath.getName)
-      .filter(_.contains(".legacy."))
-    assert(residue.isEmpty, s"aside residue left behind: ${residue.mkString(",")}")
-
-    // once the fault clears, the same takeover migrates cleanly
-    fs.failTmpCreates = false
-    assert(store.takeOver(legacy, mine))
-    assert(store.read().exists(java.util.Arrays.equals(_, mine)))
-    assert(fs.getFileStatus(p).isDirectory)
-  }
-
-  /** Injects an IOException into the version-tmp-file create — the
-    * exact middle of the migration's mkdirs/create/rename window. */
-  private class CrashOnTmpCreateFs(inner: org.apache.hadoop.fs.FileSystem)
-      extends HdfsSemanticsFs(inner) {
-    @volatile var failTmpCreates = false
-    override def create(f: Path,
-        permission: org.apache.hadoop.fs.permission.FsPermission,
-        overwrite: Boolean, bufferSize: Int, replication: Short,
-        blockSize: Long,
-        progress: org.apache.hadoop.util.Progressable)
-        : org.apache.hadoop.fs.FSDataOutputStream = {
-      if (failTmpCreates && f.getName.startsWith(".v.tmp"))
-        throw new java.io.IOException("injected create failure")
-      super.create(f, permission, overwrite, bufferSize, replication,
-        blockSize, progress)
-    }
   }
 
   test("VersionedSlotStore hammer: a beating holder is NEVER usurped by polling waiters (refresh never passes through ABSENT)") {
